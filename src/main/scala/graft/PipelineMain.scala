@@ -17,6 +17,16 @@ import org.apache.spark.sql.SparkSession
   *     [--input-sentence-size N] [--unigram-soft-em true|false]
   *     [--export-dtype uint16|int32]
   *
+  * `--resume-from` restarts at a step whose input directory is on disk.
+  * A full run writes `ingest_parquet`, `minhash_parquet` and every later
+  * directory, so `ingest`, `clean`, `clustering`, `train_tokenizer`,
+  * `tokenize` and `export` are always valid. It keeps the clean → quality
+  * → pii → minhash handoffs in memory, so `quality`, `pii` and `minhash`
+  * are valid only where an earlier partial run wrote their input (e.g.
+  * `--steps clean,quality` writes `quality_parquet`); otherwise the run
+  * fails at once, naming the missing directory, and `clean` is the
+  * resume point.
+  *
   * NOTE the tokenizer-training defaults deliberately diverge from the
   * reference train CLI's: this build defaults to the IDENTITY knobs
   * (--character-coverage 1.0, no sentence sampling) so fixture-trained

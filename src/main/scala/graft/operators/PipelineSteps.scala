@@ -3,7 +3,7 @@ package graft.operators
 import graft.core.Pipeline._
 import graft.functions.{HashFunctions, PiiFunctions, TextFunctions}
 import graft.sources.WetSource
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -31,21 +31,11 @@ private[operators] class SerializableHadoopConf(
 /** The nine reference pipeline steps (reference: src/llm_data_pipeline/
   * pipeline.py:85-95 — ingest → clean → quality → pii → minhash →
   * clustering → train_tokenizer → tokenize → export) as Spark steps over
-  * the directory-handoff contract. Every step is restartable in
-  * isolation because its input is the previous step's parquet dir. */
+  * the directory-handoff contract. Each step reads and writes through
+  * `Pipeline.readStep`/`writeStep`: run on its own, a step reads the
+  * previous step's parquet dir and writes its own, so it is restartable
+  * in isolation; inside `Pipeline.run` the row-local steps fuse. */
 object PipelineSteps {
-
-  private def readStep(spark: SparkSession, cfg: PipelineConfig, step: String): DataFrame = {
-    val df = spark.read.parquet(stepDir(cfg.outputBase, stepInput(step)))
-    cfg.limit.map(df.limit).getOrElse(df)
-  }
-
-  private def writeStep(df: DataFrame, cfg: PipelineConfig, step: String): Long = {
-    val dir = stepDir(cfg.outputBase, step)
-    df.write.mode("overwrite").parquet(dir)
-    // count from the written files — no second execution of the lineage
-    df.sparkSession.read.parquet(dir).count()
-  }
 
   /** ingest: WET files → documents parquet (S1-S3). */
   case class IngestStep(maxFiles: Int = Int.MaxValue,
@@ -63,7 +53,9 @@ object PipelineSteps {
   /** clean: normalize + metrics + judge; kept/dropped dual outputs
     * (reference: src/llm_data_pipeline/clean/run.py:105-117). The lineage
     * is persisted before the kept/dropped fork so the scan+judge runs
-    * once, not three times like the reference. */
+    * once, not three times like the reference. Inside a fused segment
+    * the kept rows stay in memory, and the persisted judge with them
+    * until the segment ends; the dropped rows are always written. */
   case class CleanStep(thresholds: TextFunctions.CleanThresholds = TextFunctions.CleanThresholds())
       extends Step {
     val name = "clean"
@@ -79,12 +71,14 @@ object PipelineSteps {
         .withColumn("drop_reason", TextFunctions.judgeReason(col("text"), thresholds))
         .withColumn("kept", col("drop_reason") === "ok")
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val inRows = judged.count()
-      val kept = writeStep(judged.filter(col("kept")), cfg, name)
-      judged.filter(!col("kept")).write.mode("overwrite")
-        .parquet(s"${cfg.outputBase}/dropped_parquet")
-      judged.unpersist()
-      StepStats(name, inRows, kept, 0, Map("dropped" -> (inRows - kept).toString))
+      try {
+        val inRows = judged.count()
+        writeStep(judged.filter(col("kept")), cfg, name)
+        val droppedDir = s"${cfg.outputBase}/dropped_parquet"
+        judged.filter(!col("kept")).write.mode("overwrite").parquet(droppedDir)
+        val dropped = spark.read.parquet(droppedDir).count()
+        StepStats(name, inRows, inRows - dropped, 0, Map("dropped" -> dropped.toString))
+      } finally release(judged, name)
     }
   }
 

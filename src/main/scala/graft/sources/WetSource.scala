@@ -130,12 +130,16 @@ object WetSource {
     }
   }
 
-  /** File list → distributed document table. */
+  /** File list → distributed document table. The sorted list is cut
+    * into equal contiguous slices, one per partition (one file each up to
+    * 256 files), without a shuffle. A round-robin `repartition` deals
+    * each input partition's files from a random start, so some partitions
+    * get two files and others none. */
   def read(spark: SparkSession, paths: Seq[String], cfg: WetConfig = WetConfig()): DataFrame = {
     import spark.implicits._
     val sorted = paths.sorted
-    val ds: Dataset[String] =
-      spark.createDataset(sorted).repartition(math.max(1, math.min(sorted.size, 256)))
+    val ds: Dataset[String] = spark.createDataset(
+      spark.sparkContext.parallelize(sorted, math.max(1, math.min(sorted.size, 256))))
     ds.flatMap(p => parseFile(p, cfg)).toDF()
   }
 

@@ -3,6 +3,7 @@ package graft
 import graft.core.Pipeline
 import graft.operators.PipelineSteps
 import graft.sources.WetSource
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import java.io.{ByteArrayOutputStream, FileOutputStream}
@@ -92,16 +93,7 @@ class PipelineSpec extends SparkSpec {
   test("full nine-step pipeline on fixture produces packed binary") {
     val dataDir = Files.createTempDirectory("wetdata")
     val outBase = Files.createTempDirectory("pipeout").toString
-    // 2 files; include an exact duplicate pair and a near-duplicate pair
-    val t1 = mkText("alpha"); val t2 = mkText("omega")
-    writeWetGz(dataDir.resolve("a.wet.gz"), Seq(
-      wetRecord("http://x/1", "2025-01-01T00:00:00Z", "r1", t1),
-      wetRecord("http://x/2", "2025-01-01T00:00:01Z", "r2", t2),
-      wetRecord("http://x/3", "2025-01-01T00:00:02Z", "r3", t1)))          // exact dup
-    writeWetGz(dataDir.resolve("b.wet.gz"), Seq(
-      wetRecord("http://x/4", "2025-01-01T00:00:03Z", "r4", t2 + " extra tail words"), // near dup
-      wetRecord("http://x/5", "2025-01-01T00:00:04Z", "r5", mkText("gamma")),
-      wetRecord("http://x/6", "2025-01-01T00:00:05Z", "r6", "1 2 3 4 5 6 7 8 9 0 " * 20))) // low lang signal
+    writeFixture(dataDir)
 
     val cfg = Pipeline.PipelineConfig(
       dataDir = dataDir.toString, outputBase = outBase,
@@ -118,13 +110,17 @@ class PipelineSpec extends SparkSpec {
     assert(byStep("clustering").outputRows == 3)  // dup + near-dup removed
     assert(byStep("export").outputRows > 0)
 
-    // schema contracts per stage
-    val cleaned = spark.read.parquet(s"$outBase/cleaned_parquet")
-    assert(Seq("doc_id", "url", "warc_date", "source_path", "text", "kept", "drop_reason",
-      "m_non_ws", "m_alpha_cjk", "m_punct", "m_dup_line").forall(cleaned.columns.contains))
+    // schema contracts per stage: clean → quality → pii → minhash run as
+    // one fused segment, so only its boundary and clean's dropped rows
+    // are on disk, and minhash_parquet carries clean's columns
+    Seq("cleaned_parquet", "quality_parquet", "pii_parquet").foreach { d =>
+      assert(!Files.exists(Path.of(outBase, d)), s"$d written by a fused run")
+    }
     val dropped = spark.read.parquet(s"$outBase/dropped_parquet")
     assert(dropped.count() == 1)
     val minhash = spark.read.parquet(s"$outBase/minhash_parquet")
+    assert(Seq("doc_id", "url", "warc_date", "source_path", "text", "kept", "drop_reason",
+      "m_non_ws", "m_alpha_cjk", "m_punct", "m_dup_line").forall(minhash.columns.contains))
     assert(minhash.columns.contains("signature") && minhash.columns.contains("length"))
     assert(minhash.selectExpr("size(signature)").head().getInt(0) == 128)
     val packed = spark.read.parquet(s"$outBase/token_packing_parquet")
@@ -212,6 +208,106 @@ class PipelineSpec extends SparkSpec {
     assert(idsU.forall(id => id >= 0 && id < 500))
     assert(idsU.exists(_ >= graft.operators.UnigramTrainer.FirstPieceId),
       "at least one learned piece id in the stream")
+  }
+
+  /** Two WET files: an exact duplicate, a near duplicate and one doc
+    * clean drops (low language signal). */
+  private def writeFixture(dataDir: Path): Unit = {
+    val t1 = mkText("alpha"); val t2 = mkText("omega")
+    writeWetGz(dataDir.resolve("a.wet.gz"), Seq(
+      wetRecord("http://x/1", "2025-01-01T00:00:00Z", "r1", t1),
+      wetRecord("http://x/2", "2025-01-01T00:00:01Z", "r2", t2),
+      wetRecord("http://x/3", "2025-01-01T00:00:02Z", "r3", t1)))
+    writeWetGz(dataDir.resolve("b.wet.gz"), Seq(
+      wetRecord("http://x/4", "2025-01-01T00:00:03Z", "r4", t2 + " extra tail words"),
+      wetRecord("http://x/5", "2025-01-01T00:00:04Z", "r5", mkText("gamma")),
+      wetRecord("http://x/6", "2025-01-01T00:00:05Z", "r6", "1 2 3 4 5 6 7 8 9 0 " * 20)))
+  }
+
+  private def fixtureCfg(dataDir: Path, out: String) = Pipeline.PipelineConfig(
+    dataDir = dataDir.toString, outputBase = out,
+    langs = Seq("en", "und"), langThreshold = 0.0, defaultLidArtifact = false,
+    seqLen = 64, vocabSize = 500)
+
+  /** Hides the step's type, as a caller's tagging or timing wrapper does. */
+  private case class PassThrough(inner: Pipeline.Step) extends Pipeline.Step {
+    def name: String = inner.name
+    def run(spark: SparkSession, cfg: Pipeline.PipelineConfig): Pipeline.StepStats =
+      inner.run(spark, cfg)
+  }
+
+  test("fused run matches the steps run one at a time; wrapped steps still fuse") {
+    val dataDir = Files.createTempDirectory("wetparity")
+    writeFixture(dataDir)
+    def cfg(out: String) = fixtureCfg(dataDir, out)
+    val fusedOut = Files.createTempDirectory("fused").toString
+    val soloOut = Files.createTempDirectory("solo").toString
+    val steps = PipelineSteps.all(dataDir.toString)
+    val fused = Pipeline.run(spark, cfg(fusedOut), steps)
+    val solo = steps.map(_.run(spark, cfg(soloOut)))
+    // everything but the timing; export's path extra names the output base
+    def rows(stats: Seq[Pipeline.StepStats], out: String) = stats.map(s =>
+      (s.step, s.inputRows, s.outputRows, s.extra.map { case (k, v) => k -> v.replace(out, "OUT") }))
+    assert(rows(fused, fusedOut) == rows(solo, soloOut))
+    assert(fused.map(_.step) == Pipeline.stepOrder)
+    assert(fused.find(_.step == "clean").get.extra("dropped") == "1")
+    def minhash(out: String) =
+      spark.read.parquet(s"$out/minhash_parquet").orderBy("doc_id").collect().toSeq
+    assert(minhash(fusedOut) == minhash(soloOut))
+    assert(minhash(fusedOut).size == fused.find(_.step == "minhash").get.outputRows)
+    def export(out: String) = Files.readAllBytes(Path.of(out, "export_tokens.bin")).toSeq
+    assert(export(fusedOut) == export(soloOut))
+    // the stats file holds the filled-in counts, and no temp file is left
+    val js = spark.read.option("multiLine", "true").json(s"$fusedOut/pipeline_stats.json")
+      .select("step", "output_rows").collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(js == fused.map(s => s.step -> s.outputRows).toMap)
+    assert(Files.list(Path.of(fusedOut)).iterator().asScala.forall(!_.toString.endsWith(".tmp")))
+
+    // fusion is keyed by step name: wrapped steps fuse too, and a fused
+    // run deletes the handoff dirs the one-at-a-time run left behind
+    val wrapped = Pipeline.run(spark, cfg(soloOut), steps.map(PassThrough))
+    assert(rows(wrapped, soloOut) == rows(solo, soloOut))
+    Seq("cleaned_parquet", "quality_parquet", "pii_parquet").foreach { d =>
+      assert(!Files.exists(Path.of(soloOut, d)), s"$d left after a fused run")
+    }
+    assert(Files.exists(Path.of(soloOut, "dropped_parquet")))
+    assert(minhash(soloOut) == minhash(fusedOut))
+  }
+
+  test("resume from a fused step fails fast when its input dir is absent") {
+    val dataDir = Files.createTempDirectory("wetresume")
+    writeFixture(dataDir)
+    val out = Files.createTempDirectory("resume").toString
+    val cfg = fixtureCfg(dataDir, out)
+    val steps = PipelineSteps.all(dataDir.toString)
+    Pipeline.run(spark, cfg, steps.take(5)) // ingest … minhash
+    Seq("quality", "pii", "minhash").foreach { from =>
+      val e = intercept[IllegalArgumentException](Pipeline.run(spark, cfg, steps, Some(from)))
+      val missing = Pipeline.stepDir(out, Pipeline.stepInput(from))
+      assert(e.getMessage.contains(missing) && e.getMessage.contains("resume from 'clean'"),
+        e.getMessage)
+    }
+    // the written boundaries still resume
+    assert(Pipeline.run(spark, cfg, steps, Some("clustering")).head.outputRows == 3)
+  }
+
+  test("N equal WET files ingest into N non-empty output files, without a shuffle") {
+    val dataDir = Files.createTempDirectory("wetbalance")
+    (0 until 8).foreach { f =>
+      writeWetGz(dataDir.resolve(f"s$f%02d.wet.gz"), (0 until 5).map { i =>
+        wetRecord(s"http://b/$f/$i", "2025-01-01T00:00:00Z", s"b$f-$i", mkText(s"w${f}x$i"))
+      })
+    }
+    val out = Files.createTempDirectory("balance").toString
+    val st = PipelineSteps.IngestStep().run(spark,
+      Pipeline.PipelineConfig(dataDir = dataDir.toString, outputBase = out))
+    assert(st.outputRows == 40)
+    val parts = Files.list(Path.of(out, "ingest_parquet")).iterator().asScala
+      .map(_.toString).filter(_.endsWith(".parquet")).toSeq
+    assert(parts.map(p => spark.read.parquet(p).count()).sorted == Seq.fill(8)(5L))
+    val docs = WetSource.read(spark, WetSource.discover(dataDir.toString))
+    assert(docs.rdd.getNumPartitions == 8)
+    assert(!docs.queryExecution.executedPlan.toString.contains("Exchange"))
   }
 
   test("CLI flags parse into the pipeline config, tokenizer knobs included") {
